@@ -401,7 +401,12 @@ class CrawlEngine:
         """Resume-path seeding (reference scraper.py:258-272 re-runs the
         validated INSERT OR IGNORE every run): anti-join the seed list
         against the existing frontier and append only the new ones, ranked
-        after everything discovered so far. Returns the number inserted."""
+        after everything discovered so far. Returns the number inserted.
+
+        A rerun with the same seed list inserts nothing: when every seed
+        URL is already in the frontier's seed deltas (read driver-side
+        with pyarrow; they are the size of the seed list), this returns 0
+        without a Spark job. Any miss takes the anti-join."""
         rows = []
         seen: set[str] = set()
         for s in seeds or []:
@@ -411,6 +416,9 @@ class CrawlEngine:
         if single_url is not None and single_url not in seen:
             rows.append((single_url, len(rows), False))
         if not rows:
+            return 0
+        on_file = self.frontier.delta_values("seeds", "url")
+        if on_file is not None and {r[0] for r in rows} <= set(on_file):
             return 0
         df = self.spark.createDataFrame(  # pandas-sourced: see seed()
             _pd.DataFrame(rows, columns=["url", "pos", "needs_validation"]),
@@ -585,19 +593,31 @@ class CrawlEngine:
         """Roll every table back to the last marked wave; returns that
         wave. Idempotent. ``visited`` is included: its append runs in
         parallel with the others inside a wave, so it too can be ahead of
-        the marker after a crash."""
+        the marker after a crash. Each table walks back from CURRENT, so a
+        store already at its last marked wave parses one manifest per
+        table.
+
+        The bloom is rebuilt from the frontier unless all three hold: no
+        table was rolled back, the marker log already existed, and the
+        loaded filter's ``n_added`` equals the frontier's manifest row
+        total. Then the file on disk was saved with the frontier it
+        describes (bloom saves land before the wave marker), and a
+        finished store reopens without a Spark job."""
         last = self.last_committed_wave()
+        rolled = False
         for tbl in (self.frontier, self.pages, self.metrics, self.visited):
-            good = 0
-            for s in tbl.snapshots():
-                if s["summary"].get("wave", -1) <= last:
-                    good = s["version"]
-            tbl.rollback_to(good)
+            rolled |= tbl.rollback_to_last(
+                lambda s: s.get("wave", -1) <= last)
+        had_log = os.path.exists(self._commit_log)
         # legacy-format upgrade: establish the marker log at the recovered
         # wave so subsequent (parallel) commits have a consistent baseline
-        if last >= 0 and not os.path.exists(self._commit_log):
+        if last >= 0 and not had_log:
             self._mark_committed(last)
         if self.bloom is not None and self.frontier.exists():
+            n_added = getattr(self.bloom, "n_added", None)
+            if (not rolled and had_log and n_added is not None
+                    and n_added == self.frontier.totals().get("total_rows")):
+                return last
             # bloom may be ahead of the rolled-back frontier; rebuild exactly
             self.bloom = self._new_bloom()
             fr = self.frontier.read(self.spark)
@@ -613,15 +633,21 @@ class CrawlEngine:
         vis = self.visited.read(self.spark).select("url_hash", "url")
         return fr.join(vis, ["url_hash", "url"], "left_anti")
 
+    def _pending_from_manifests(self) -> int | None:
+        """Pending row count from manifest totals alone (no Spark job):
+        frontier rows are unique and visited rows are a subset of them
+        (Σ frontier ≥ Σ visited), so the difference IS the pending count.
+        None when a table's manifests carry no row counts."""
+        f = self.frontier.totals().get("total_rows")
+        v = self.visited.totals().get("total_rows")
+        return None if f is None or v is None else f - v
+
     def _next_rank_base(self) -> int:
         """Rank watermark from manifest summaries (no Spark job): every
-        frontier append records its max_rank; the next wave's base is the
-        next stride boundary above the running max."""
-        m = -1
-        for s in self.frontier.snapshots():
-            mr = s["summary"].get("max_rank")
-            if mr is not None:
-                m = max(m, int(mr))
+        frontier append records its max_rank and CURRENT carries the
+        running max (tables.py); the next wave's base is the next stride
+        boundary above it."""
+        m = int(self.frontier.totals().get("running_max_rank", -1))
         if m < 0 and self.frontier.exists():  # legacy store without watermarks
             row = self.frontier.read(self.spark).agg(
                 F.max("discovery_rank").alias("m")
@@ -650,6 +676,9 @@ class CrawlEngine:
         recomputable = corpus is not None or cfg.fetch_df_fn is not None
         fast = self._fast_next_count is not None and not constrained
         wave_caches: list = []  # persisted intermediates, unpersisted at wave end
+        # (lo, span) of the selected rows' discovery_rank: rank buckets
+        # are derived from it driver-side (_run_wave_body)
+        rank_bounds = None
         if fast:
             # n_selected is KNOWN driver-side (last wave's rank total /
             # seed append footers) — no count() job, no persist: the delta
@@ -662,6 +691,11 @@ class CrawlEngine:
                 self._fast_next_files = None
                 return {"wave": wave, "fetched": 0, "done": True}
             pending = self._fast_next
+            if self._fast_next_lo is not None:
+                # ranks are contiguous in [lo, lo + count)
+                rank_bounds = (self._fast_next_lo, n_selected)
+        elif self._pending_from_manifests() == 0:
+            n_selected = 0  # manifest totals: nothing pending, no Spark job
         else:
             pending = self.pending()
             if robots_rules is not None:
@@ -677,8 +711,15 @@ class CrawlEngine:
                                               persist_registry=wave_caches)
             pending = pending.persist()
             wave_caches.append(pending)
-            n_selected = pending.count()
-        rank_lo = self._fast_next_lo if fast else None
+            st = pending.agg(
+                F.count("*").alias("n"),
+                F.min("discovery_rank").alias("lo"),
+                F.max("discovery_rank").alias("hi"),
+            ).collect()[0]
+            n_selected = int(st["n"])
+            if n_selected:
+                lo = int(st["lo"])
+                rank_bounds = (lo, int(st["hi"]) - lo + 1)
         fast_nfiles = self._fast_next_nfiles if fast else None
         src_delta_files = self._fast_next_files if fast else None
         self._fast_next = None
@@ -701,9 +742,9 @@ class CrawlEngine:
 
         try:
             return self._run_wave_body(
-                wave, corpus, cfg, pending, n_selected, rank_lo, fast_nfiles,
-                src_delta_files, elide_visited, recomputable, constrained,
-                wave_caches, phases, tick, t0,
+                wave, corpus, cfg, pending, n_selected, rank_bounds,
+                fast_nfiles, src_delta_files, elide_visited, recomputable,
+                constrained, wave_caches, phases, tick, t0,
             )
         finally:
             # a failed commit/job must not leak the wave's cache entries
@@ -735,9 +776,9 @@ class CrawlEngine:
         self.spark.conf.set("spark.sql.files.openCostInBytes", v)
 
     def _run_wave_body(
-        self, wave, corpus, cfg, pending, n_selected, rank_lo, fast_nfiles,
-        src_delta_files, elide_visited, recomputable, constrained,
-        wave_caches, phases, tick, t0,
+        self, wave, corpus, cfg, pending, n_selected, rank_bounds,
+        fast_nfiles, src_delta_files, elide_visited, recomputable,
+        constrained, wave_caches, phases, tick, t0,
     ) -> dict:
         acc0 = (self.scrape_time_acc.value
                 if self.scrape_time_acc is not None else None)
@@ -903,12 +944,15 @@ class CrawlEngine:
             new_links = anti_join_new(links, seen, bloom=self.bloom,
                                       persist_registry=wave_caches)
             bucket = None
-            if rank_lo is not None:
-                # src_rank of every discovered link lies in this wave's
-                # pending stride [rank_lo, rank_lo + n_selected) — derive
-                # order-aligned rank buckets driver-side (monotonic in
-                # okey == (src_rank, pos)), skipping repartitionByRange's
+            if rank_bounds is not None:
+                # src_rank of every discovered link lies in the selected
+                # rows' rank range [lo, lo + span) — derive order-aligned
+                # rank buckets driver-side (monotonic in okey, whose high
+                # bits are src_rank), skipping repartitionByRange's
                 # sampling pass which would recompute fetch+scrape+dedup.
+                # (Sparse constrained picks can leave buckets uneven; the
+                # delta files stay balanced — _commit_frontier splits them
+                # by the exact wrank.)
                 # 4x MORE buckets than partitions: the rank shuffle hashes
                 # bucket ids into partitions, and hashing nb ids into nb
                 # partitions leaves ~37% of partitions EMPTY (at 2
@@ -917,7 +961,7 @@ class CrawlEngine:
                 # keeps the delta's file count == parallelism so the next
                 # wave's repartition skip stays active
                 nb = 4 * self.spark.sparkContext.defaultParallelism
-                span = max(1, n_selected)
+                rank_lo, span = rank_bounds
                 bucket = F.least(
                     F.lit(nb - 1),
                     F.greatest(
@@ -1270,7 +1314,16 @@ class CrawlEngine:
         cache table and gates every wave (``robots_rules`` may still be
         passed to pre-seed/override rules — both gates apply). ``on_wave``,
         if given, is called with each wave's metrics dict (CLI progress
-        reporting)."""
+        reporting).
+
+        Manifest totals are the authority for "nothing pending": frontier
+        rows are unique and visited rows are frontier rows (Σ frontier ≥
+        Σ visited), so a selecting wave whose manifests show Σ frontier −
+        Σ visited = 0 ends the crawl without a Spark job. With
+        ``recover()``'s bloom check and ``seed_if_new``'s seed check, a
+        finished store reopened with ``resume=True`` runs no Spark job.
+        Where the metadata cannot answer (manifests without row counts, a
+        rolled-back table, a new seed), the Spark path runs as before."""
         if robots_rules is not None and robots_rules.isEmpty():
             robots_rules = None  # ONE emptiness job per run, not per wave
         live_robots = self.cfg.respect_robots and corpus is None
@@ -1530,12 +1583,8 @@ class CrawlEngine:
         """(total_links, visited_links) from manifest row counts — the
         reference progress bar's total/initial (scraper.py:278-283),
         driver-side with zero Spark jobs."""
-        def _total(tbl: SnapshotTable) -> int:
-            if not tbl.exists():
-                return 0
-            return sum(int(s["summary"].get("rows") or 0)
-                       for s in tbl.snapshots())
-        return _total(self.frontier), _total(self.visited)
+        return (self.frontier.totals().get("total_rows") or 0,
+                self.visited.totals().get("total_rows") or 0)
 
     def links_state(self) -> DataFrame:
         """The reference's links table: (url, visited) with deterministic

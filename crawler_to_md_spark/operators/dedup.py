@@ -65,8 +65,9 @@ def _bucket_pairs(banded: DataFrame, keys: list[str], val: str,
     skew cap exactly (count-filter over the same keys).
 
     Pair generation is the sorted-array i<j explosion — exactly the
-    self-join's candidate set (values are distinct within a bucket: one
-    row per (value, band) upstream, so position order i<j <=> a < b) —
+    self-join's candidate set (values are made distinct within a bucket
+    by ``array_distinct``, so position order i<j <=> a < b and a value
+    repeated in one bucket never pairs with itself) —
     CHUNKED so a degenerate bucket near ``max_bucket`` cannot
     materialize its C(k, 2) pairs as one in-memory array value (50M+
     structs at the 10k minhash cap would be a multi-GB per-task
@@ -83,7 +84,7 @@ def _bucket_pairs(banded: DataFrame, keys: list[str], val: str,
     """
     buck = (
         banded.groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(val)).alias("_vs"))
+        .agg(F.array_sort(F.array_distinct(F.collect_list(val))).alias("_vs"))
         .filter((F.size("_vs") >= 2) & (F.size("_vs") <= max_bucket))
     )
     vs = F.col("_vs")

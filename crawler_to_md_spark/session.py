@@ -12,6 +12,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    core count: a pinned or containerised run sees only its share)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    """Driver heap default: half the host's MemTotal (in local mode the
+    driver JVM runs every executor task, so it gets the largest share;
+    the rest stays with the Python workers and the OS)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1024, kib // 2048)}m"
+    except (OSError, ValueError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "crawler_to_md_spark",
     master: str | None = None,
@@ -25,8 +49,11 @@ def get_spark(
     - shuffle.partitions sized to parallelism, not the 200 default.
     - Runtime bloom-filter join pruning on (complements the explicit
       seen-set bloom in operators/seen.py).
+    - Host-fit defaults: ``local[<affinity CPUs>]`` and a driver heap of
+      half the host's memory; ``SPARK_GRAFT_CPUS`` and
+      ``SPARK_GRAFT_DRIVER_MEM`` override them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master.split("[")[-1].rstrip("]") if "[" in master else cpus
@@ -56,7 +83,8 @@ def get_spark(
         # 64 KB — operators/seen.py), so real plans stay small; the cap is
         # a backstop that keeps audits intact if a large literal sneaks in.
         .config("spark.sql.maxPlanStringLength", str(2 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

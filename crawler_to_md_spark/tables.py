@@ -19,7 +19,8 @@ PORTABILITY: this class is LOCAL-FILESYSTEM-ONLY by design (os.listdir /
 os.replace / pyarrow footer reads on local paths). It stands in for a real
 Iceberg catalog in this jar-less sandbox; on a cluster with hdfs/s3 table
 roots you swap the class, not the engine (the engine touches only
-``append / read / read_delta / snapshots / read_at / rollback_to``).
+``append / read / read_delta / snapshots / read_at / rollback_to_last /
+totals / delta_values``).
 
 State updates are APPEND-ONLY LOGS, never in-place row updates: the
 frontier's ``visited`` transition (reference ``UPDATE links SET visited``,
@@ -36,6 +37,19 @@ append introduced — the physical re-append was pure write amplification).
 ``read()`` unions the referenced files (projected + constants) with the
 physical data; Iceberg's analog is a manifest referencing existing
 datafiles from another snapshot.
+
+RUNNING TOTALS: every summary carries ``total_rows`` (the parent's total
+plus this delta's ``rows``, virtual deltas included), and the frontier's
+carries ``running_max_rank``, so CURRENT alone answers "how many rows"
+and "which rank comes next" in O(1) (``totals``) — no walk over every
+version's manifest. Each version holds its own totals, so ``rollback_to``
+leaves them consistent. The crawl engine takes these totals as the
+authority for "nothing pending": frontier rows are unique and every
+visited row is a frontier row (Σ frontier ≥ Σ visited), so Σ frontier −
+Σ visited is the exact pending count and 0 ends a crawl, or reopens a
+finished store, without a Spark job. Manifests written before the totals
+existed are folded over every version instead, and the next commit on
+such a table stores the result.
 
 DURABILITY: commits are atomic against PROCESS crashes (write-temp +
 ``os.replace``). Against power loss / kernel crashes they are only
@@ -64,23 +78,24 @@ def _fsync_path(path: str) -> None:
         os.close(fd)
 
 
-def _footer_rows(files: list[str]) -> int:
-    """Sum of num_rows across parquet footers — the Iceberg-manifest
-    record-count analog, read driver-side in milliseconds. Non-local table
-    roots (s3://, hdfs://) resolve through the pyarrow filesystem for the
-    URI instead of assuming the local FS (ADVICE r2)."""
+def _parquet_file(f: str):
+    """pyarrow ParquetFile for a local path or, for non-local table roots
+    (s3://, hdfs://), through the pyarrow filesystem for the URI instead
+    of assuming the local FS (ADVICE r2)."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in files:
-        if "://" in f:
-            from pyarrow import fs as pafs
+    if "://" in f:
+        from pyarrow import fs as pafs
 
-            filesystem, path = pafs.FileSystem.from_uri(f)
-            total += pq.ParquetFile(path, filesystem=filesystem).metadata.num_rows
-        else:
-            total += pq.ParquetFile(f).metadata.num_rows
-    return total
+        filesystem, path = pafs.FileSystem.from_uri(f)
+        return pq.ParquetFile(path, filesystem=filesystem)
+    return pq.ParquetFile(f)
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Sum of num_rows across parquet footers — the Iceberg-manifest
+    record-count analog, read driver-side in milliseconds."""
+    return sum(_parquet_file(f).metadata.num_rows for f in files)
 
 
 def _empty_df(spark: SparkSession, schema) -> DataFrame:
@@ -100,17 +115,9 @@ def _footer_max(files: list[str], column: str):
     Spark job) — None when no file carries stats for the column (caller
     falls back to an agg job). Exact for the int/long columns the engine
     asks about."""
-    import pyarrow.parquet as pq
-
     best = None
     for f in files:
-        if "://" in f:
-            from pyarrow import fs as pafs
-
-            filesystem, path = pafs.FileSystem.from_uri(f)
-            pf = pq.ParquetFile(path, filesystem=filesystem)
-        else:
-            pf = pq.ParquetFile(f)
+        pf = _parquet_file(f)
         md = pf.metadata
         try:
             idx = pf.schema_arrow.get_field_index(column)
@@ -124,6 +131,24 @@ def _footer_max(files: list[str], column: str):
                 continue
             best = st.max if best is None else max(best, st.max)
     return best
+
+
+_TOTALS = ("total_rows", "running_max_rank")
+
+
+def _running_totals(parent: dict, summary: dict) -> dict:
+    """``summary`` plus the running totals of the snapshot it publishes,
+    given the parent snapshot's totals: ``total_rows`` (the parent's plus
+    this delta's ``rows``; absent once any delta lacks ``rows``) and, on
+    tables whose deltas record a ``max_rank``, ``running_max_rank``."""
+    out = dict(summary)
+    if "rows" in summary and "total_rows" in parent:
+        out["total_rows"] = int(parent["total_rows"]) + int(summary["rows"])
+    ranks = [int(v) for v in (parent.get("running_max_rank"),
+                              summary.get("max_rank")) if v is not None]
+    if ranks:
+        out["running_max_rank"] = max(ranks)
+    return out
 
 
 class SnapshotTable:
@@ -157,20 +182,56 @@ class SnapshotTable:
     def snapshots(self) -> list[dict]:
         return [self._manifest(v) for v in range(1, self.current_version() + 1)]
 
-    def _commit(self, files: list[str], summary: dict, schema_json: str,
-                delta_files: list[str] | None = None,
-                virtual: list[dict] | None = None) -> dict:
+    def totals(self, cur: dict | None = None) -> dict:
+        """Running totals (``_running_totals``) of the current snapshot, or
+        of ``cur`` when it is the current manifest already read: CURRENT's
+        summary answers in O(1); manifests written before running totals
+        existed are folded over every version once (the next commit
+        stores the result). No ``total_rows`` when some delta lacks
+        ``rows``."""
+        if cur is None:
+            cur = self.current_snapshot()
+        if cur is not None and "total_rows" in cur["summary"]:
+            t = cur["summary"]
+        else:
+            t = {"total_rows": 0}
+            for s in self.snapshots():
+                t = _running_totals(t, s["summary"])
+        return {k: t[k] for k in _TOTALS if k in t}
+
+    def delta_values(self, kind: str, column: str) -> list | None:
+        """Values of ``column`` in the delta files of every version whose
+        summary ``kind`` matches (driver-side, no Spark job); None when
+        such a version lists no delta files."""
+        files: list[str] = []
+        for s in self.snapshots():
+            if s["summary"].get("kind") == kind:
+                if "delta_files" not in s:
+                    return None
+                files += s["delta_files"]
+        return [v for f in files
+                for v in _parquet_file(f).read(columns=[column])
+                .column(column).to_pylist()]
+
+    def _commit(self, delta_files: list[str], summary: dict, schema_json: str,
+                virtual: list[dict] | None = None,
+                cur: dict | None = None) -> dict:
+        """Publish the next version: the parent's files plus
+        ``delta_files``. ``cur`` is the parent manifest when the caller
+        already read it."""
         parent = self.current_version()
         version = parent + 1
-        if virtual is None:  # carry the accumulated virtual deltas forward
+        if cur is None:
             cur = self.current_snapshot()
+        if virtual is None:  # carry the accumulated virtual deltas forward
             virtual = (cur.get("virtual") or []) if cur else []
         manifest = {
             "version": version,
             "parent": parent,
-            "files": files,
-            "delta_files": delta_files if delta_files is not None else files,
-            "summary": summary,
+            "files": (cur["files"] if cur else []) + delta_files,
+            "delta_files": delta_files,
+            "summary": _running_totals(
+                self.totals(cur) if cur else {"total_rows": 0}, summary),
             "schema": schema_json,
         }
         if virtual:
@@ -235,8 +296,6 @@ class SnapshotTable:
         summary (driver-side; None/absent stats leave the key out) — lets
         callers fold a stats job into the write they already pay for."""
         files, schema_json = self._write_datafiles(df, target_partitions)
-        cur = self.current_snapshot()
-        all_files = (cur["files"] if cur else []) + files
         summary = dict(summary or {})
         # row count from parquet FOOTERS (driver-side metadata read, no
         # Spark job) — lets the engine know wave sizes without count()s
@@ -245,8 +304,7 @@ class SnapshotTable:
             v = _footer_max(files, col)
             if v is not None:
                 summary.setdefault(key, v)
-        return self._commit(all_files, summary, schema_json,
-                            delta_files=files)
+        return self._commit(files, summary, schema_json)
 
     def append_local(self, rows: list[tuple], schema,
                      summary: dict | None = None) -> dict:
@@ -280,12 +338,9 @@ class SnapshotTable:
         pq.write_table(
             pa.Table.from_arrays(arrays, schema=pa.schema(fields)), path
         )
-        cur = self.current_snapshot()
-        all_files = (cur["files"] if cur else []) + [path]
         summary = dict(summary or {})
         summary.setdefault("rows", len(rows))
-        return self._commit(all_files, summary, schema.json(),
-                            delta_files=[path])
+        return self._commit([path], summary, schema.json())
 
     def read_delta(self, spark: SparkSession, manifest: dict) -> DataFrame:
         """Read only the datafiles a specific append introduced — a
@@ -298,10 +353,6 @@ class SnapshotTable:
             return _empty_df(spark, schema)
         # explicit schema — skip the footer-inference job (_read_manifest)
         return spark.read.schema(schema).parquet(*files)
-
-    def overwrite(self, df: DataFrame, summary: dict | None = None) -> dict:
-        files, schema_json = self._write_datafiles(df)
-        return self._commit(files, summary or {}, schema_json, virtual=[])
 
     def append_virtual(self, spec: dict, summary: dict | None = None) -> dict:
         """Commit rows BY REFERENCE: no datafiles are written; ``read()``
@@ -327,8 +378,8 @@ class SnapshotTable:
                 "append_virtual needs a prior snapshot to define the schema"
             )
         virtual = (cur.get("virtual") or []) + [spec]
-        return self._commit(cur["files"], dict(summary or {}), cur["schema"],
-                            delta_files=[], virtual=virtual)
+        return self._commit([], dict(summary or {}), cur["schema"],
+                            virtual=virtual, cur=cur)
 
     # -- reads ----------------------------------------------------------------
 
@@ -386,6 +437,19 @@ class SnapshotTable:
 
     def exists(self) -> bool:
         return self.current_version() > 0
+
+    def rollback_to_last(self, keep) -> bool:
+        """Point CURRENT at the newest snapshot whose summary satisfies
+        ``keep`` (version 0 if none does), walking back from CURRENT — a
+        table already at such a snapshot parses one manifest. Returns
+        whether CURRENT moved."""
+        cur = v = self.current_version()
+        while v > 0 and not keep(self._manifest(v)["summary"]):
+            v -= 1
+        if v == cur:
+            return False
+        self.rollback_to(v)
+        return True
 
     def rollback_to(self, version: int) -> None:
         """Point CURRENT back at an older snapshot (crash-recovery: discard

@@ -442,6 +442,9 @@ def test_bucket_pairs_chunk_boundaries_match_combinations(spark):
     sizes = {1: 1, 2: 2, 3: 7, 4: 8, 5: 9, 6: 19, 7: 30}
     rows = [(b, v * 10 + b) for b, k in sizes.items() for v in range(k)]
     rows += [(99, 1000), (99, 1001)]  # second bucket sharing a pair shape
+    # bucket 98 repeats the pair (13, 23) that bucket 3 also emits: the
+    # cross-bucket dedup must collapse it to one row
+    rows += [(98, 13), (98, 23)]
     max_bucket = 25  # drops the 30-element bucket only
     df = spark.createDataFrame(rows, "bucket int, id long")
     got = sorted(
@@ -458,5 +461,22 @@ def test_bucket_pairs_chunk_boundaries_match_combinations(spark):
             v * 10 + b if b != 99 else 1000 + v for v in range(k)
         )
         want |= set(itertools.combinations(vals, 2))
+    assert (13, 23) in want
     assert got == sorted(want)
     assert any(k > cap for k in sizes.values())  # multi-chunk exercised
+
+
+def test_bucket_pairs_repeated_value_never_pairs_with_itself(spark):
+    """A value repeated within one bucket (a caller that emits the same
+    (bucket, value) row twice) must yield neither a (v, v) self-pair nor
+    a bucket that only the repeat pushed over ``max_bucket``."""
+    from crawler_to_md_spark.operators.dedup import _bucket_pairs
+
+    rows = [(1, 5), (1, 5), (1, 6), (2, 7), (2, 7), (3, 8), (3, 8), (3, 9)]
+    df = spark.createDataFrame(rows, "bucket int, id long")
+    got = sorted(
+        map(tuple, _bucket_pairs(
+            df, ["bucket"], "id", 2, "id_a", "id_b", explode_cap=8,
+        ).collect())
+    )
+    assert got == [(5, 6), (8, 9)]

@@ -10,6 +10,9 @@ import json
 import os
 import shutil
 
+import pytest
+from pyspark.sql import functions as F
+
 from crawler_to_md_spark.crawl.corpus import synth_corpus
 from crawler_to_md_spark.crawl.engine import CrawlConfig, CrawlEngine
 from crawler_to_md_spark.tables import SnapshotTable
@@ -23,6 +26,22 @@ def _final_state(eng):
     links = [(r["url"], r["visited"]) for r in eng.links_state().collect()]
     pages = [(r["url"], r["content"]) for r in eng.pages_df().collect()]
     return links, pages
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs submitted while it ran), counted by
+    statusTracker job ids before and after (the listener bus is drained
+    first so every finished job is in the status store)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ids()
+    out = fn()
+    return out, len(ids() - before)
 
 
 def test_resume_after_k_waves(spark, tmp_path):
@@ -57,21 +76,19 @@ def test_resume_with_bloom(spark, tmp_path):
     assert _final_state(resumed) == _final_state(full)
 
 
-def test_crash_mid_wave_recovery(spark, tmp_path):
-    """Simulate a crash between table commits: frontier/pages got wave k
-    appends but visited didn't -> recover() must roll them back and replay
-    wave k to the same final state."""
+def _crash_mid_wave_recovery(spark, tmp_path, use_bloom):
     corpus = _corpus(spark, 40)
-    full = CrawlEngine(spark, str(tmp_path / "full"), CrawlConfig(use_bloom=False))
+    full = CrawlEngine(spark, str(tmp_path / "full"),
+                       CrawlConfig(use_bloom=use_bloom))
     full.run(corpus, single_url="https://host0.example/p/0")
 
     crash = CrawlEngine(spark, str(tmp_path / "crash"),
-                        CrawlConfig(use_bloom=False, max_waves=1))
+                        CrawlConfig(use_bloom=use_bloom, max_waves=1))
     crash.run(corpus, single_url="https://host0.example/p/0")
 
     # hand-craft the partial wave 2: append pages + frontier, but NOT visited
     eng2 = CrawlEngine(spark, str(tmp_path / "crash"),
-                       CrawlConfig(use_bloom=False))
+                       CrawlConfig(use_bloom=use_bloom))
     pending = eng2.pending().limit(3).persist()
     eng2.pages.append(
         pending.selectExpr(
@@ -90,9 +107,22 @@ def test_crash_mid_wave_recovery(spark, tmp_path):
     pending.unpersist()
 
     resumed = CrawlEngine(spark, str(tmp_path / "crash"),
-                          CrawlConfig(use_bloom=False))
+                          CrawlConfig(use_bloom=use_bloom))
     resumed.run(corpus, resume=True)
     assert _final_state(resumed) == _final_state(full)
+
+
+def test_crash_mid_wave_recovery(spark, tmp_path):
+    """Simulate a crash between table commits: frontier/pages got wave k
+    appends but visited didn't -> recover() must roll them back and replay
+    wave k to the same final state."""
+    _crash_mid_wave_recovery(spark, tmp_path, use_bloom=False)
+
+
+def test_crash_mid_wave_recovery_with_bloom(spark, tmp_path):
+    """As above with the seen-set bloom: the rolled-back store must not
+    keep the bloom it loaded unchecked."""
+    _crash_mid_wave_recovery(spark, tmp_path, use_bloom=True)
 
 
 def test_metrics_lineage(spark, tmp_path):
@@ -106,23 +136,20 @@ def test_metrics_lineage(spark, tmp_path):
     assert total_pages == eng.pages_df().count()
 
 
-def test_crash_after_visited_before_marker(spark, tmp_path):
-    """Parallel-commit failure mode: ALL of wave k's table appends landed
-    (including visited) but the crash hit before the marker line — the
-    wave is uncommitted and recovery must roll every table back, visited
-    included, then replay to the same final state."""
+def _crash_after_visited_before_marker(spark, tmp_path, use_bloom):
     corpus = _corpus(spark, 40)
-    full = CrawlEngine(spark, str(tmp_path / "full"), CrawlConfig(use_bloom=False))
+    full = CrawlEngine(spark, str(tmp_path / "full"),
+                       CrawlConfig(use_bloom=use_bloom))
     full.run(corpus, single_url="https://host0.example/p/0")
 
     crash = CrawlEngine(spark, str(tmp_path / "crash"),
-                        CrawlConfig(use_bloom=False, max_waves=1))
+                        CrawlConfig(use_bloom=use_bloom, max_waves=1))
     crash.run(corpus, single_url="https://host0.example/p/0")
 
     # hand-craft the partial wave 2: pages AND visited appends land, the
     # marker does not (the crash window unique to parallel commits)
     eng2 = CrawlEngine(spark, str(tmp_path / "crash"),
-                       CrawlConfig(use_bloom=False))
+                       CrawlConfig(use_bloom=use_bloom))
     pending = eng2.pending().limit(3).persist()
     eng2.pages.append(
         pending.selectExpr(
@@ -149,9 +176,22 @@ def test_crash_after_visited_before_marker(spark, tmp_path):
     assert eng2.last_committed_wave() == 1  # marker, not visited, decides
 
     resumed = CrawlEngine(spark, str(tmp_path / "crash"),
-                          CrawlConfig(use_bloom=False))
+                          CrawlConfig(use_bloom=use_bloom))
     resumed.run(corpus, resume=True)
     assert _final_state(resumed) == _final_state(full)
+
+
+def test_crash_after_visited_before_marker(spark, tmp_path):
+    """Parallel-commit failure mode: ALL of wave k's table appends landed
+    (including visited) but the crash hit before the marker line — the
+    wave is uncommitted and recovery must roll every table back, visited
+    included, then replay to the same final state."""
+    _crash_after_visited_before_marker(spark, tmp_path, use_bloom=False)
+
+
+def test_crash_after_visited_before_marker_with_bloom(spark, tmp_path):
+    """As above with the seen-set bloom."""
+    _crash_after_visited_before_marker(spark, tmp_path, use_bloom=True)
 
 
 def test_resume_store_written_by_previous_version(spark, tmp_path):
@@ -242,11 +282,21 @@ def test_resume_store_written_by_round4_format(spark, tmp_path):
                       bloom_bits_per_shard=1 << 16)
     eng = CrawlEngine(spark, root, cfg)
     assert eng.last_committed_wave() == meta["max_waves"]  # marker log
+    # manifests from before running totals: folded over every version
+    assert "total_rows" not in eng.frontier.current_snapshot()["summary"]
+    assert eng.frontier.totals() == {"total_rows": 16,
+                                     "running_max_rank": 2097163}
     eng.run(corpus, resume=True)
 
     full = CrawlEngine(spark, str(tmp_path / "full"), cfg)
     full.run(corpus, single_url="https://host0.example/p/0")
     assert _final_state(eng) == _final_state(full)
+    # the resumed run's commits store the totals, and they are exact
+    for tbl in (eng.frontier, eng.visited):
+        assert "total_rows" in tbl.current_snapshot()["summary"]
+        assert tbl.totals()["total_rows"] == tbl.read(spark).count()
+    assert eng.frontier.totals()["running_max_rank"] == (
+        eng.frontier.read(spark).agg({"discovery_rank": "max"}).first()[0])
 
 
 def test_resume_after_crash_in_lag_window(spark, tmp_path):
@@ -297,3 +347,82 @@ def test_resume_after_crash_in_lag_window(spark, tmp_path):
     pages = resumed.pages_df().collect()
     urls = [r["url"] for r in pages]
     assert len(urls) == len(set(urls))
+
+
+_P0 = "https://host0.example/p/0"
+
+
+@pytest.mark.parametrize("kind", ["single_url", "host_budget_seeds"])
+def test_reopen_finished_store_runs_no_spark_jobs(spark, tmp_path, kind):
+    """A finished store reopened with resume=True (what rerunning with the
+    same cache folder does) answers "anything left?" from metadata: the
+    bloom matches the frontier's row total, every seed is in the seed
+    deltas, and the manifest totals show nothing pending — zero Spark
+    jobs, and the state stays the uninterrupted crawl's."""
+    corpus = _corpus(spark, 40)
+    if kind == "single_url":
+        cfg, start = {}, {"single_url": _P0}
+    else:
+        cfg = {"per_host_budget": 2}
+        start = {"seeds": [f"https://host{j % 3}.example/p/{j}"
+                           for j in (0, 1, 2, 3, 4, 6)]}
+    root = str(tmp_path / "s")
+    CrawlEngine(spark, root, CrawlConfig(**cfg)).run(corpus, **start)
+    eng = CrawlEngine(spark, root, CrawlConfig(**cfg))
+    state = _final_state(eng)
+
+    metrics, jobs = _jobs_during(
+        spark, lambda: eng.run(corpus, resume=True, **start))
+    assert jobs == 0
+    assert [m["done"] for m in metrics] == [True]
+    assert _final_state(eng) == state
+
+
+def test_reopen_rebuilds_bloom_missing_a_seed_append(spark, tmp_path):
+    """A crash between a resumed seed's frontier append and its bloom save
+    leaves a filter whose n_added is one short of the frontier: recover()
+    must rebuild it (no false negative), and keep a filter that matches."""
+    corpus = _corpus(spark, 40)
+    root = str(tmp_path / "s")
+    CrawlEngine(spark, root, CrawlConfig()).run(corpus, single_url=_P0)
+    bloom_path = os.path.join(root, "bloom", "seen.npz")
+    shutil.copy(bloom_path, bloom_path + ".old")
+    eng = CrawlEngine(spark, root, CrawlConfig())
+    assert eng.seed_if_new(seeds=["https://host0.example/new"]) == 1
+    os.replace(bloom_path + ".old", bloom_path)  # the bloom save is lost
+
+    eng = CrawlEngine(spark, root, CrawlConfig())
+    stale = eng.bloom
+    assert stale.n_added == eng.frontier.totals()["total_rows"] - 1
+    eng.recover()
+    assert eng.bloom is not stale
+    assert eng.bloom.n_added == eng.frontier.totals()["total_rows"]
+    fr = eng.frontier.read(spark)
+    assert fr.filter(~eng.bloom.probe(spark, F.col("url_hash"))).count() == 0
+
+    again = CrawlEngine(spark, root, CrawlConfig())
+    kept = again.bloom
+    again.recover()
+    assert again.bloom is kept
+
+
+def test_resumed_seed_discovered_by_a_wave_is_not_duplicated(spark, tmp_path):
+    """A resumed seed list naming a URL a wave already discovered misses
+    the seed-delta check, takes the anti-join fallback and inserts
+    nothing."""
+    corpus = _corpus(spark, 40)
+    root = str(tmp_path / "s")
+    CrawlEngine(spark, root, CrawlConfig()).run(corpus, single_url=_P0)
+    eng = CrawlEngine(spark, root, CrawlConfig())
+    found = (eng.frontier.read(spark).filter(F.col("src_rank").isNotNull())
+             .orderBy("discovery_rank").first()["url"])
+    state = _final_state(eng)
+    rows = eng.frontier.totals()["total_rows"]
+
+    _, jobs = _jobs_during(
+        spark, lambda: eng.run(corpus, seeds=[_P0, found], resume=True))
+    assert jobs > 0  # the anti-join fallback ran
+    assert eng.frontier.totals()["total_rows"] == rows
+    fr = eng.frontier.read(spark)
+    assert fr.count() == fr.select("url").distinct().count() == rows
+    assert _final_state(eng) == state
