@@ -93,6 +93,21 @@ def _npart(n_rows: int, rows_per_file: int = 50_000, cap: int = 32) -> int:
     return max(1, min(cap, (n_rows + rows_per_file - 1) // rows_per_file))
 
 
+def _bucket_by_cuts(col, cuts: list[int]):
+    """Bucket id = number of ``cuts`` (sorted ascending) <= ``col``, as a
+    binary-search CASE tree: monotone in ``col``, ids in
+    ``[0, len(cuts)]``. Repeated cuts leave empty buckets."""
+
+    def pick(lo: int, hi: int):  # the id lies in [lo, hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi + 1) // 2  # id >= mid  <=>  col >= cuts[mid - 1]
+        return F.when(col >= F.lit(cuts[mid - 1]), pick(mid, hi)).otherwise(
+            pick(lo, mid - 1))
+
+    return pick(0, len(cuts))
+
+
 def needs_repartition_for_map(n_files: int | None, parallelism: int) -> bool:
     """Whether a per-row fetch wave must shuffle the pending URL rows
     before its map stage. With no shuffle between the frontier-delta read
@@ -307,6 +322,22 @@ class CrawlEngine:
             impl=self.cfg.bloom_impl,
             initial_bits=self.cfg.bloom_initial_bits,
         )
+
+    def _bloom_fits_config(self) -> bool:
+        """Whether the loaded filter is what _new_bloom() builds from the
+        current config: under a growable config any JVM filter (growth,
+        not the config, sets its size as keys arrive; the loader marks it
+        growable), else a fixed JVM filter of shards x bits. Numpy filters
+        keep no ``n_added``, so recover() rebuilds them anyway."""
+        from ..operators.seen import JvmBloomSeenSet
+
+        b, cfg = self.bloom, self.cfg
+        if cfg.bloom_impl != "jvm" or not isinstance(b, JvmBloomSeenSet):
+            return False
+        if cfg.bloom_initial_bits is not None:
+            return b.growable
+        return (not b.growable
+                and b.num_bits == cfg.bloom_shards * cfg.bloom_bits_per_shard)
 
     def _grow_bloom(self) -> None:
         """Amortized-doubling rebuild (seen.py class docstring): a fresh
@@ -597,12 +628,13 @@ class CrawlEngine:
         store already at its last marked wave parses one manifest per
         table.
 
-        The bloom is rebuilt from the frontier unless all three hold: no
-        table was rolled back, the marker log already existed, and the
-        loaded filter's ``n_added`` equals the frontier's manifest row
-        total. Then the file on disk was saved with the frontier it
-        describes (bloom saves land before the wave marker), and a
-        finished store reopens without a Spark job."""
+        The bloom is rebuilt from the frontier unless all four hold: no
+        table was rolled back, the marker log already existed, the loaded
+        filter's ``n_added`` equals the frontier's manifest row total, and
+        the filter is of the kind and size the current config builds
+        (_bloom_fits_config). Then the file on disk was saved with the
+        frontier it describes (bloom saves land before the wave marker),
+        and a finished store reopens without a Spark job."""
         last = self.last_committed_wave()
         rolled = False
         for tbl in (self.frontier, self.pages, self.metrics, self.visited):
@@ -616,7 +648,8 @@ class CrawlEngine:
         if self.bloom is not None and self.frontier.exists():
             n_added = getattr(self.bloom, "n_added", None)
             if (not rolled and had_log and n_added is not None
-                    and n_added == self.frontier.totals().get("total_rows")):
+                    and n_added == self.frontier.totals().get("total_rows")
+                    and self._bloom_fits_config()):
                 return last
             # bloom may be ahead of the rolled-back frontier; rebuild exactly
             self.bloom = self._new_bloom()
@@ -676,9 +709,17 @@ class CrawlEngine:
         recomputable = corpus is not None or cfg.fetch_df_fn is not None
         fast = self._fast_next_count is not None and not constrained
         wave_caches: list = []  # persisted intermediates, unpersisted at wave end
-        # (lo, span) of the selected rows' discovery_rank: rank buckets
-        # are derived from it driver-side (_run_wave_body)
-        rank_bounds = None
+        # rank buckets (_run_wave_body): 4x MORE buckets than partitions —
+        # the rank shuffle hashes bucket ids into partitions, and hashing
+        # nb ids into nb partitions leaves ~37% of partitions EMPTY (at 2
+        # partitions, a coin flip serializes the whole next wave onto one
+        # core); 4x oversampling balances occupancy and keeps the delta's
+        # file count == parallelism so the next wave's repartition skip
+        # stays active
+        nb = 4 * self.spark.sparkContext.defaultParallelism
+        # each discovered link's rank bucket, a Column over its src_rank
+        # (the selected row that found it), derived driver-side below
+        bucket = None
         if fast:
             # n_selected is KNOWN driver-side (last wave's rank total /
             # seed append footers) — no count() job, no persist: the delta
@@ -691,9 +732,15 @@ class CrawlEngine:
                 self._fast_next_files = None
                 return {"wave": wave, "fetched": 0, "done": True}
             pending = self._fast_next
-            if self._fast_next_lo is not None:
-                # ranks are contiguous in [lo, lo + count)
-                rank_bounds = (self._fast_next_lo, n_selected)
+            # ranks are contiguous in [lo, lo + count): equal-span buckets
+            bucket = F.least(
+                F.lit(nb - 1),
+                F.greatest(
+                    F.lit(0),
+                    ((F.col("src_rank") - F.lit(self._fast_next_lo))
+                     * nb / F.lit(n_selected)).cast("int"),
+                ),
+            )
         elif self._pending_from_manifests() == 0:
             n_selected = 0  # manifest totals: nothing pending, no Spark job
         else:
@@ -711,15 +758,20 @@ class CrawlEngine:
                                               persist_registry=wave_caches)
             pending = pending.persist()
             wave_caches.append(pending)
+            # count + rank quantiles in one agg over the persisted pick.
+            # Its ranks span several waves' strides (_RANK_STRIDE gaps),
+            # so equal-SPAN buckets would put nearly every row in one or
+            # two of them; equal-COUNT cuts keep the buckets balanced.
             st = pending.agg(
                 F.count("*").alias("n"),
-                F.min("discovery_rank").alias("lo"),
-                F.max("discovery_rank").alias("hi"),
+                F.percentile_approx(
+                    "discovery_rank", [i / nb for i in range(1, nb)]
+                ).alias("cuts"),
             ).collect()[0]
             n_selected = int(st["n"])
             if n_selected:
-                lo = int(st["lo"])
-                rank_bounds = (lo, int(st["hi"]) - lo + 1)
+                bucket = _bucket_by_cuts(F.col("src_rank"),
+                                         [int(c) for c in st["cuts"]])
         fast_nfiles = self._fast_next_nfiles if fast else None
         src_delta_files = self._fast_next_files if fast else None
         self._fast_next = None
@@ -742,7 +794,7 @@ class CrawlEngine:
 
         try:
             return self._run_wave_body(
-                wave, corpus, cfg, pending, n_selected, rank_bounds,
+                wave, corpus, cfg, pending, n_selected, bucket, nb,
                 fast_nfiles, src_delta_files, elide_visited, recomputable,
                 constrained, wave_caches, phases, tick, t0,
             )
@@ -776,7 +828,7 @@ class CrawlEngine:
         self.spark.conf.set("spark.sql.files.openCostInBytes", v)
 
     def _run_wave_body(
-        self, wave, corpus, cfg, pending, n_selected, rank_bounds,
+        self, wave, corpus, cfg, pending, n_selected, bucket, nb,
         fast_nfiles, src_delta_files, elide_visited, recomputable,
         constrained, wave_caches, phases, tick, t0,
     ) -> dict:
@@ -943,33 +995,6 @@ class CrawlEngine:
             seen = self.frontier.read(self.spark).select("url_hash", "url")
             new_links = anti_join_new(links, seen, bloom=self.bloom,
                                       persist_registry=wave_caches)
-            bucket = None
-            if rank_bounds is not None:
-                # src_rank of every discovered link lies in the selected
-                # rows' rank range [lo, lo + span) — derive order-aligned
-                # rank buckets driver-side (monotonic in okey, whose high
-                # bits are src_rank), skipping repartitionByRange's
-                # sampling pass which would recompute fetch+scrape+dedup.
-                # (Sparse constrained picks can leave buckets uneven; the
-                # delta files stay balanced — _commit_frontier splits them
-                # by the exact wrank.)
-                # 4x MORE buckets than partitions: the rank shuffle hashes
-                # bucket ids into partitions, and hashing nb ids into nb
-                # partitions leaves ~37% of partitions EMPTY (at 2
-                # partitions, a coin flip serializes the whole next wave
-                # onto one core); 4x oversampling balances occupancy and
-                # keeps the delta's file count == parallelism so the next
-                # wave's repartition skip stays active
-                nb = 4 * self.spark.sparkContext.defaultParallelism
-                rank_lo, span = rank_bounds
-                bucket = F.least(
-                    F.lit(nb - 1),
-                    F.greatest(
-                        F.lit(0),
-                        ((F.col("src_rank") - F.lit(rank_lo))
-                         * nb / F.lit(span)).cast("int"),
-                    ),
-                )
             # driver-side plan construction cost up to here (py4j round
             # trips building the fetch/scrape/links/anti-join tree) —
             # separated from the jobs so the bench can tell Python plan
@@ -981,6 +1006,9 @@ class CrawlEngine:
                 f"wave{wave}:materialize+rank"
             )
             try:
+                # bucket (run_wave) is monotone in src_rank, okey's high
+                # bits, so it replaces repartitionByRange, whose sampling
+                # pass would recompute fetch+scrape+dedup; ranks stay exact
                 ranked, n_new, pinned = with_global_rank(
                     new_links, ["okey"], "wrank",
                     start=0, bucket_col=bucket,
@@ -991,7 +1019,7 @@ class CrawlEngine:
                     # bucket hashing gave the fullest partition ~1.5-2x the
                     # mean and the high parallelism level inherited it as a
                     # per-wave straggler)
-                    num_buckets=(nb if bucket is not None else None),
+                    num_buckets=nb,
                 )
             finally:
                 self.spark.sparkContext.setJobDescription(None)

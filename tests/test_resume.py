@@ -406,6 +406,39 @@ def test_reopen_rebuilds_bloom_missing_a_seed_append(spark, tmp_path):
     assert again.bloom is kept
 
 
+def test_reopen_with_other_bloom_config_rebuilds_bloom(spark, tmp_path):
+    """A finished store reopened under a different bloom config gets the
+    filter that config builds, though n_added matches the frontier: a
+    fixed-size config replaces the growable filter, and a numpy config
+    replaces the JVM one."""
+    from crawler_to_md_spark.operators.seen import BloomSeenSet
+
+    corpus = _corpus(spark, 40)
+    root = str(tmp_path / "s")
+    CrawlEngine(spark, root, CrawlConfig()).run(corpus, single_url=_P0)
+    fixed = CrawlConfig(bloom_initial_bits=None, bloom_shards=4,
+                        bloom_bits_per_shard=1 << 12)
+    eng = CrawlEngine(spark, root, fixed)
+    grown = eng.bloom
+    assert grown.n_added == eng.frontier.totals()["total_rows"]
+    eng.recover()
+    assert eng.bloom is not grown
+    assert (eng.bloom.growable, eng.bloom.num_bits) == (False, 4 << 12)
+    fr = eng.frontier.read(spark)
+    assert fr.filter(~eng.bloom.probe(spark, F.col("url_hash"))).count() == 0
+
+    again = CrawlEngine(spark, root, fixed)  # the config now fits: kept
+    kept = again.bloom
+    again.recover()
+    assert again.bloom is kept
+
+    numpy = CrawlEngine(spark, root, CrawlConfig(
+        bloom_impl="numpy", bloom_shards=4, bloom_bits_per_shard=1 << 12))
+    numpy.recover()
+    assert isinstance(numpy.bloom, BloomSeenSet)
+    assert (numpy.bloom.P, numpy.bloom.m) == (4, 1 << 12)
+
+
 def test_resumed_seed_discovered_by_a_wave_is_not_duplicated(spark, tmp_path):
     """A resumed seed list naming a URL a wave already discovered misses
     the seed-delta check, takes the anti-join fallback and inserts
