@@ -48,3 +48,27 @@ def test_host_budget_crawl_same_final_state(spark, tmp_path):
     # off-base elsewhere.example links) -> <=12 selected per wave
     assert all(m["selected"] <= 12 for m in metrics if not m.get("done"))
     assert _state(capped) == _state(free)
+
+
+def test_rank_cut_buckets_balanced_across_strides(spark):
+    """A constrained pick spans several waves' rank strides. Buckets cut at
+    the pick's rank quantiles (as run_wave derives them) stay monotone in
+    the rank and evenly filled, where equal-span buckets over [min, max]
+    would put nearly every row in the two buckets nearest each stride."""
+    from pyspark.sql import functions as F
+
+    from crawler_to_md_spark.crawl.engine import _RANK_STRIDE, _bucket_by_cuts
+
+    nb = 16
+    ranks = [s * _RANK_STRIDE + i
+             for s, n in ((1, 300), (2, 500), (5, 200)) for i in range(n)]
+    df = spark.createDataFrame([(r,) for r in ranks], "src_rank long")
+    cuts = df.agg(F.percentile_approx(
+        "src_rank", [i / nb for i in range(1, nb)]).alias("c")).first()["c"]
+    rows = (df.select("src_rank",
+                      _bucket_by_cuts(F.col("src_rank"), cuts).alias("b"))
+            .orderBy("src_rank").collect())
+    ids = [r["b"] for r in rows]
+    assert ids == sorted(ids) and 0 <= ids[0] and ids[-1] <= nb - 1
+    sizes = [ids.count(b) for b in range(nb)]
+    assert max(sizes) <= 2 * len(ranks) / nb
